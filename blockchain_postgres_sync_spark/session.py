@@ -20,6 +20,31 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: upper bound of the machine-derived driver heap (the former fixed default)
+_MAX_DRIVER_MEMORY_MB = 32 * 1024
+
+
+def default_driver_memory() -> str:
+    """Heap for the local-mode JVM: ``SPARK_DRIVER_MEMORY`` when set, else
+    60 % of this machine's MemTotal, at most 32 GiB.  Local mode runs
+    driver and executors in ONE JVM, so a heap sized for a bigger host lets
+    it grow past physical memory and get OOM-killed mid-run; the other
+    40 % stays for the JVM's off-heap use, the Python workers and the OS."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    heap_mb = min(_MAX_DRIVER_MEMORY_MB, total_mb * 6 // 10)
+                    return f"{max(1024, heap_mb)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{_MAX_DRIVER_MEMORY_MB}m"
+
+
 def get_spark(
     app_name: str = "blockchain-postgres-sync-spark",
     master: str | None = None,
@@ -98,9 +123,9 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # local mode = ONE JVM: driver memory is executor memory; size it for
-        # the harness box so shuffles/caches never spill at bench SF
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        # local mode = ONE JVM: driver memory is executor memory; size it
+        # from the machine it runs on (see default_driver_memory)
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
         # write-commit overhead: the streaming store versions every table

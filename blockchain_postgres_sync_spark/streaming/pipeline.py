@@ -332,10 +332,12 @@ def normalize_squash(
     )
     new_tables = {}
     for name, df in tx_tables.items():
+        # the using-join moves block_uid to the front; select restores the
+        # table's column order (the staged files must match the stored ones)
         joined = df.join(F.broadcast(mapping), "block_uid", "left")
         new_tables[name] = joined.withColumn(
             "block_uid", F.coalesce(F.col("anchor"), F.col("block_uid"))
-        ).drop("anchor")
+        ).select(*df.columns)
     return new_blocks, new_tables
 
 
@@ -607,28 +609,34 @@ def apply_appends(
 
     # cross-batch uid continuation (W3): a height's sequence continues where
     # the stored txs for that height left off (the reference's stateful
-    # TxUidGenerator, convert.rs:45-72).  New heights live in the tail
-    # buckets, so the pruned read suffices.
-    tail_uid_frames = []
-    for n in TX_NAMES:
-        t = store.read_or_none(n)
-        if t is not None:
-            tail_uid_frames.append(
-                t.filter(F.col("p_hb") >= rb).select("uid", "height")
+    # TxUidGenerator, convert.rs:45-72).  tx_ids holds exactly the uids of
+    # the 18 typed tables (staged from their merged frames, trimmed with
+    # them on rollback), and uid div UID_HEIGHT_MULTIPLIER is the height —
+    # so one pruned scan of it gives every tail height's next sequence.
+    stored_ids = store.read_or_none("tx_ids")
+    if stored_ids is not None:
+        base = (
+            stored_ids.filter(F.col("p_hb") >= rb)
+            .groupBy(
+                F.expr(f"uid div {UID_HEIGHT_MULTIPLIER}").cast("int").alias("height")
             )
-    if tail_uid_frames:
-        union_uids = tail_uid_frames[0]
-        for t in tail_uid_frames[1:]:
-            union_uids = union_uids.unionByName(t)
-        base = union_uids.groupBy("height").agg(
-            (F.max(F.col("uid") % UID_HEIGHT_MULTIPLIER) + 1).alias("_base")
+            .agg((F.max(F.col("uid") % UID_HEIGHT_MULTIPLIER) + 1).alias("_base"))
         )
         new_raw = (
             new_raw.join(F.broadcast(base), "height", "left")
             .withColumn("uid", F.col("uid") + F.coalesce(F.col("_base"), F.lit(0)))
             .drop("_base")
         )
-    new_raw = new_raw.persist()
+    # Materialize the classified batch ONCE, eagerly (localCheckpoint, as
+    # recompute_candles does for its minute tail): every per-trigger plan
+    # below — 18 typed merges, 6 children, the tx_ids union, each staged
+    # write — starts from this small in-memory relation.  Carrying the JSON
+    # explode, uid window, pandas UDFs and uid join in ~30 lineages would
+    # cost each its own Python plan build and Catalyst analysis, and a lazy
+    # cache would leave the concurrent writers racing to fill it.  Not
+    # executor-loss-resilient, but the store commit is transactional, so a
+    # lost batch simply replays.
+    new_raw = new_raw.localCheckpoint(eager=True)
 
     # typed tables + children: tail-scoped merge, range-replace staging.
     # Lease-cancel resolution (J1) looks up the compact (id, uid) store so
@@ -637,28 +645,26 @@ def apply_appends(
     typed_new = classify_txs(new_raw, prior_ids=store.read_or_none("tx_ids"))
     children_new = extract_children(new_raw)
 
-    # a table with no stored version and no rows of its type this batch
-    # needs no staging — the common case for most of the 18 typed tables
-    # in any one batch (the reference likewise only INSERTs types that
-    # occurred).  Tables that already exist must still restage: squash
-    # can re-point their tail block_uids.
+    # a typed table with no stored version and no rows of its type this
+    # batch needs no staging — the common case for most of the 18 typed
+    # tables in any one batch (the reference likewise only INSERTs types
+    # that occurred).  Typed tables that already exist must still restage:
+    # squash can re-point their tail block_uids.  Child tables carry no
+    # block_uid, so without rows of their parent type this batch their
+    # content cannot change and they are never restaged.
     present_types = {int(t) for t in meta_row["_types"]}
-
-    def _untouched(name: str, tx_type: int) -> bool:
-        return not store.exists(name) and tx_type not in present_types
 
     merged_tx: dict[str, DataFrame] = {}
     for n, df in typed_new.items():
         name = f"txs_{n}"
-        if _untouched(name, n):
+        if not store.exists(name) and n not in present_types:
             continue
         merged_tx[name] = _tail(name, df.withColumn("p_hb", _hb("height"))).unionByName(
             df.withColumn("p_hb", _hb("height"))
         )
     child_frames: dict[str, DataFrame] = {}
     for name, df in children_new.items():
-        parent_type = int(name.split("_")[1])
-        if _untouched(name, parent_type):
+        if int(name.split("_")[1]) not in present_types:
             continue
         new_part = df.withColumn("p_hb", _hb("height"))
         child_frames[name] = _tail(name, new_part).unionByName(new_part)
@@ -834,8 +840,6 @@ def apply_appends(
         + [_origins, _tickers, _waves]
         + candle_tasks
     )
-
-    new_raw.unpersist()
 
 
 # ------------------------------------------------------------ rollback (T3)
@@ -1013,12 +1017,14 @@ def process_batch(
     """One foreachBatch invocation: segment the updates into append runs and
     rollbacks (mod.rs:200-230), apply in order, recompute candles once per
     segment that needs it, commit atomically (T1)."""
-    # ONE JSON parse per trigger: every downstream job (segment metadata,
-    # extract_* branches, staged writes) re-scans the micro-batch frame,
-    # and for the file source each scan re-reads and re-parses the JSON
-    # payload (guide §5 caching: reused + expensive to recompute).  The
-    # batch is micro by construction, so the cache is bounded; released
-    # in the finally below.
+    # ONE JSON parse per trigger: the segment metadata, the batch-metadata
+    # collect, the classified-tx checkpoint and the writes built straight
+    # from the updates (blocks, SCD logs, waves_data) each scan the
+    # micro-batch frame, and for the file source each scan re-reads and
+    # re-parses the JSON payload (guide §5 caching: reused + expensive to
+    # recompute).  The tx-derived writes read apply_appends' checkpoint
+    # instead.  The batch is micro by construction, so the cache is
+    # bounded; released in the finally below.
     ctx = _micro_batch_confs(store.spark)
     ctx.__enter__()
     batch_df = batch_df.persist()

@@ -18,6 +18,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: directory name Spark/Hive uses for NULL partition values
 _HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
@@ -35,6 +36,13 @@ class TableStore:
                 self._manifest = json.load(f)
         self._staged: dict[str, int] = {}
         self._frames: dict[tuple[str, int], DataFrame] = {}
+        # data-file schema of every version THIS instance wrote: re-reading
+        # its own writes then skips parquet schema inference (one footer job
+        # per read).  Partition columns are left out — Spark discovers them
+        # from the directory names (driver-side, no job) with the same type
+        # inference a fresh reader applies.  In memory only: other readers
+        # (views, a restarted consumer) infer as before.
+        self._schemas: dict[tuple[str, int], StructType] = {}
 
     # -- read side -----------------------------------------------------
 
@@ -52,7 +60,10 @@ class TableStore:
         # so the memo removes one tiny driver job per repeat read
         key = (name, versions[name])
         if key not in self._frames:
-            self._frames[key] = self.spark.read.parquet(self._dir(*key))
+            reader = self.spark.read
+            if key in self._schemas:
+                reader = reader.schema(self._schemas[key])
+            self._frames[key] = reader.parquet(self._dir(*key))
         return self._frames[key]
 
     def read_or_none(self, name: str) -> DataFrame | None:
@@ -74,18 +85,33 @@ class TableStore:
             w.parquet(self._dir(name, next_v))
         finally:
             self.spark.sparkContext.setJobDescription(None)
-        self._ensure_readable(name, next_v, df)
+        self._remember_schema(name, next_v, df, partition_by or [])
         self._staged[name] = next_v
 
-    def _ensure_readable(self, name: str, version: int, df: DataFrame) -> None:
-        """A partitioned write of an EMPTY frame emits no parquet files (and
-        thus no schema); rewrite it flat so readers always infer a schema
-        (the partition column stays as a data column — filters still work)."""
+    def _remember_schema(
+        self,
+        name: str,
+        version: int,
+        df: DataFrame,
+        partition_by: list[str],
+        has_files: bool = False,
+    ) -> None:
+        """Record the data-file schema of a version just written, after
+        making sure it has one: a partitioned write of an EMPTY frame emits
+        no parquet files (and thus no schema), so it is rewritten flat — the
+        partition column stays a data column (filters still work) and is
+        remembered as one."""
         d = self._dir(name, version)
-        for _root, _dirs, files in os.walk(d):
-            if any(f.endswith(".parquet") for f in files):
-                return
-        df.limit(0).write.mode("overwrite").parquet(d)
+        if not has_files and not any(
+            f.endswith(".parquet")
+            for _root, _dirs, files in os.walk(d)
+            for f in files
+        ):
+            df.limit(0).write.mode("overwrite").parquet(d)
+            partition_by = []
+        self._schemas[(name, version)] = StructType(
+            [f for f in df.schema.fields if f.name not in partition_by]
+        )
 
     def stage_range_replace(
         self,
@@ -161,8 +187,9 @@ class TableStore:
                 if fn.endswith(".parquet"):
                     os.link(os.path.join(src, fn), os.path.join(dst, fn))
                     linked = True
-        if not linked:
-            self._ensure_readable(name, next_v, new_df)
+        self._remember_schema(
+            name, next_v, new_df, [partition_col], has_files=linked
+        )
         self._staged[name] = next_v
 
     def compact(
@@ -255,11 +282,13 @@ class TableStore:
             if prev is not None and prev != v:
                 shutil.rmtree(self._dir(name, prev), ignore_errors=True)
                 self._frames.pop((name, prev), None)
+                self._schemas.pop((name, prev), None)
 
     def rollback_staged(self) -> None:
         for name, v in self._staged.items():
             shutil.rmtree(self._dir(name, v), ignore_errors=True)
             self._frames.pop((name, v), None)
+            self._schemas.pop((name, v), None)
         self._staged = {}
 
     def _dir(self, name: str, version: int) -> str:

@@ -21,7 +21,8 @@ from blockchain_postgres_sync_spark.operators.candles import (
 )
 from blockchain_postgres_sync_spark.plans.views import decimals_view
 from blockchain_postgres_sync_spark.streaming.pipeline import (
-    CANDLE_TABLES, TX_NAMES, process_batch, read_all_candles, run_stream,
+    CANDLE_TABLES, CHILD_NAMES, TX_NAMES, process_batch, read_all_candles,
+    run_stream,
 )
 from blockchain_postgres_sync_spark.streaming.store import TableStore
 
@@ -61,7 +62,8 @@ def stores(spark, tmp_path_factory):
 
 ALL_TABLES = (
     ["blocks_microblocks", "asset_updates", "asset_tickers", "waves_data",
-     "asset_origins", "candles"] + TX_NAMES
+     "asset_origins", "candles", "tx_ids", "asset_updates_log",
+     "asset_tickers_log"] + TX_NAMES + CHILD_NAMES
 )
 
 
@@ -71,6 +73,80 @@ def test_incremental_equals_oneshot(stores):
     b = _table_sets(one, ALL_TABLES)
     for name in ALL_TABLES:
         assert a[name] == b[name], f"table {name} diverges between incremental and one-shot"
+
+
+def test_normalize_squash_fallback_matches_fast_path(
+    spark, stores, tmp_path, monkeypatch
+):
+    """With the driver-side tail cap forced to 0, every squash takes the
+    distributed normalize_squash form — including the settled_below
+    branch (the second batch squashes micro-3/micro-4 into stored
+    block-2) — and must land the same store as the default path."""
+    from blockchain_postgres_sync_spark.streaming import pipeline
+
+    inc, _ = stores
+    calls = []
+    fallback = pipeline.normalize_squash
+
+    def counted(*args, **kwargs):
+        calls.append(kwargs.get("settled_below"))
+        return fallback(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "_SQUASH_TAIL_CAP", 0)
+    monkeypatch.setattr(pipeline, "normalize_squash", counted)
+    slow = _run_log(spark, tmp_path / "slow", wf.scenario_log(), [2, 3, 2])
+    assert any(c is not None for c in calls)
+    a = _table_sets(slow, ALL_TABLES)
+    b = _table_sets(inc, ALL_TABLES)
+    for name in ALL_TABLES:
+        assert a[name] == b[name], f"table {name} diverges on the fallback path"
+
+
+def test_unchanged_children_keep_their_version(spark, tmp_path):
+    """A batch without txs of a child table's parent type leaves that
+    child table's version alone (children carry no block_uid, so a squash
+    cannot change them), while the typed tables still restage."""
+    rows = wf.scenario_log()
+    store = _run_log(spark, tmp_path / "s", rows[:2], [2])
+    before = dict(store._manifest)
+    assert set(CHILD_NAMES) <= set(before)
+    batch = rows[2:4]
+    assert not any(
+        t["tx_type"] == 11 for r in batch for t in r["transactions"] or []
+    )
+    process_batch(store, _mk_updates(spark, batch), wf.ASSET_STORAGE)
+    for name in CHILD_NAMES:
+        assert store._manifest[name] == before[name], name
+    assert store._manifest["txs_7"] > before["txs_7"]
+
+
+def test_schema_memo_matches_fresh_inference(spark, stores, tmp_path):
+    """A store re-reading its own writes uses the schemas it remembered
+    at write time; they must equal what a fresh reader infers from the
+    files, column order included — for the p_hb (int) tables, the
+    candles table (p_ib, string) and empty partitioned stages, which are
+    written flat."""
+    inc, _ = stores
+    fresh = TableStore(spark, inc.root)
+    assert {"candles", "txs_7", "tx_ids"} <= set(inc._manifest)
+    for name, version in inc._manifest.items():
+        assert (name, version) in inc._schemas, name
+        assert inc.read(name).schema == fresh.read(name).schema, name
+
+    store = TableStore(spark, str(tmp_path / "empty"))
+    rows = spark.createDataFrame([(1, 1500), (2, 2500)], "uid long, height int")
+    rows = rows.withColumn("p_hb", F.floor(F.col("height") / 1000).cast("int"))
+    empty = rows.filter(F.lit(False))
+    store.stage("staged_empty", empty, partition_by=["p_hb"])
+    store.stage_range_replace("replaced_empty", empty, "p_hb", 0)
+    store.stage_range_replace("trimmed", rows, "p_hb", 0)
+    store.commit()
+    store.stage_range_replace("trimmed", empty, "p_hb", 0)
+    store.commit()
+    fresh = TableStore(spark, store.root)
+    for name in ("staged_empty", "replaced_empty", "trimmed"):
+        assert store.read(name).schema == fresh.read(name).schema, name
+        assert store.read(name).count() == 0, name
 
 
 def test_squash_semantics(stores):

@@ -25,11 +25,12 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from blockchain_postgres_sync_spark.functions.text import tokens  # noqa: E402
 from blockchain_postgres_sync_spark.operators import stats  # noqa: E402
+from blockchain_postgres_sync_spark.session import default_driver_memory  # noqa: E402
 
 spark = (
     SparkSession.builder.master("local[32]")
     .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.driver.memory", "48g")
+    .config("spark.driver.memory", default_driver_memory())
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
