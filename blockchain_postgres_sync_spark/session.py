@@ -51,7 +51,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # cores: SPARK_GRAFT_CPUS when set, else the CPUs this process may run on
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
 
@@ -93,10 +94,7 @@ def get_spark(
         # can only MERGE map outputs (never exceed shuffle.partitions), so a
         # small advisory size costs nothing on big stages; on a real cluster
         # override via extra_conf to ~64m for multi-GB shuffles
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "256k"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         # ...and floor the coalesce at the session's core count: AQE sizes
         # post-shuffle partitions by BYTES, but this engine's byte-light
@@ -106,16 +104,17 @@ def get_spark(
         # a 32-core box (round-10 profiling: a 2.7 s single-task posting
         # aggregation inside tfidf_rerank).  Floor = shuffle_partitions
         # (the core count locally, total cores on a cluster — the same
-        # floor Spark's own parallelismFirst default enforces), env-
-        # tunable.  Interleaved A/B over 26 mixed-shape queries at sf0.1:
-        # 45.7 -> 36.4 s, 24/26 queries faster, worst regression +0.24 s
+        # floor Spark's own parallelismFirst default enforces); extra_conf
+        # overrides it like any other setting.  Interleaved A/B over 26
+        # mixed-shape queries at sf0.1: 45.7 -> 36.4 s, 24/26 queries
+        # faster, worst regression +0.24 s
         # (candles_1m); the round-7 tiny-task concern that motivated
         # allowing full collapse is gone since the cascade became the
         # 2-exchange one-pass form (re-measured: cascade 3.9 -> 2.3 s
         # WITH the floor).
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionNum",
-            os.environ.get("SPARK_GRAFT_MIN_COALESCED", str(shuffle_partitions)),
+            str(shuffle_partitions),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -30,16 +30,12 @@ _NANOS_COLUMNS: dict[str, list[str]] = {"events": ["ts"]}
 #: table-sized shuffle.  Self-disabling at scale: a properly laid-out
 #: big table is a DIRECTORY of many files (skipped), a single file over
 #: ``max`` bytes carries enough row groups to split natively (skipped),
-#: and remote paths can't be stat'ed (skipped).  Values are env-tunable;
-#: results are partitioning-independent everywhere by construction
-#: (hash-verified at sf0.1 and, with the floor forced to 0, at sf0.01 —
-#: see OPTIMIZATION_r10.md).
-_FANOUT_MIN = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", str(512 * 1024))
-)
-_FANOUT_MAX = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", str(2 * 1024**3))
-)
+#: and remote paths can't be stat'ed (skipped).  Results are
+#: partitioning-independent everywhere by construction (hash-verified at
+#: sf0.1 and, with the floor forced to 0, at sf0.01 — see
+#: OPTIMIZATION_r10.md).
+_FANOUT_MIN = 512 * 1024
+_FANOUT_MAX = 2 * 1024**3
 
 #: Default fan-out set: the corpus tables whose consumers run heavy
 #: per-row kernels (tokenize/shingle/md5 over text; quantize/argmin
@@ -54,11 +50,7 @@ _FANOUT_MAX = int(
 #: 0.49 -> 1.91 s before the restriction.  This is workload knowledge
 #: the optimizer doesn't have (guide §8); callers can override per
 #: call via ``fanout=``.
-_FANOUT_TABLES = frozenset(
-    os.environ.get(
-        "SPARK_GRAFT_FANOUT_TABLES", "documents,embeddings"
-    ).split(",")
-)
+_FANOUT_TABLES = frozenset({"documents", "embeddings"})
 
 
 def _fanout_partitions(path: str, cores: int) -> int:

@@ -17,7 +17,13 @@ Reproduces the reference consumer's lifecycle (SURVEY.md §3.1) Spark-first:
 - T1 atomicity: all staged tables promote in ONE manifest swap per batch
   (streaming/store.py) — the transaction analog.
 
-Scale notes: blocks are a tiny dimension (1 row/block) so the squash window
+Each decision has one path, as in the reference: the squash is always
+planned on the driver from the collected speculative tail (one UPDATE
+path, mod.rs:769-792), every SCD rechain goes through ``_rechain`` (one
+reopen repair, mod.rs:824-858), and the per-trigger Spark settings are
+constants, not knobs.
+
+Scale notes: blocks are a tiny dimension (1 row/block) so the squash plan
 and rollback lookups are cheap; tx/candle merges rewrite only rows above the
 watermark — with height-bucket partitioning the rewritten partition set is
 the speculative tail, O(1) per batch.  SCD rechaining (appends AND
@@ -29,10 +35,10 @@ reorg depth, not dimension size.
 from __future__ import annotations
 
 import datetime as _dt
-import os
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import CANDLE_CASCADE, INTERVALS, UID_HEIGHT_MULTIPLIER
@@ -70,6 +76,18 @@ CANDLE_TABLES = ["candles_1m"] + [f"candles_{dst}" for _, dst in CANDLE_CASCADE]
 HEIGHT_BUCKET = 1000
 
 
+#: Spark settings for one trigger's plans (see _micro_batch_confs)
+_MICRO_BATCH_CONFS = {
+    "spark.sql.shuffle.partitions": "4",
+    "spark.sql.adaptive.coalescePartitions.minPartitionNum": "1",
+    # AQE materializes EVERY exchange/broadcast of a plan as its own
+    # Spark job; on micro-batch plans (dozens of tiny exchanges per
+    # trigger) that job-per-stage floor IS the wall clock, while the
+    # runtime re-optimization it buys is worthless at a few thousand rows
+    "spark.sql.adaptive.enabled": "false",
+}
+
+
 @contextmanager
 def _micro_batch_confs(spark: SparkSession):
     """Size shuffle width by MICRO-BATCH volume, not session/cluster width,
@@ -82,30 +100,18 @@ def _micro_batch_confs(spark: SparkSession):
     here).  At 32 cores every per-batch join/window/write stage ran 32+
     tiny tasks and every AQE broadcast subtree 33-66 — measured 217 jobs /
     ~49 s of job time per 5-trigger run, almost all scheduler floor (guide
-    §2.2: partition count must follow data volume).  Width is env-tunable
-    (``SPARK_GRAFT_STREAM_SHUFFLE``): raise it on deployments whose
-    triggers carry millions of rows; everything here is AQE-coalesced, so
-    an over-wide setting only costs scheduling, never correctness.
+    §2.2: partition count must follow data volume).
+
+    The values are constants: width 4, coalesce floor 1, AQE off.  They
+    follow the trigger's size, which ``maxFilesPerTrigger`` bounds, not
+    the machine, and every caller ran exactly these values; the
+    wide/narrow A/B that chose them is recorded in OPTIMIZATION_r11.md.
     Restored in ``finally`` so interleaved batch queries on the same
     session keep the session values.
     """
     conf = spark.conf
-    width = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4")
-    floor = os.environ.get("SPARK_GRAFT_STREAM_MIN_COALESCED", "1")
-    aqe = os.environ.get("SPARK_GRAFT_STREAM_AQE", "false")
-    wanted = {
-        "spark.sql.shuffle.partitions": width,
-        "spark.sql.adaptive.coalescePartitions.minPartitionNum": floor,
-        # AQE materializes EVERY exchange/broadcast of a plan as its own
-        # Spark job; on micro-batch plans (dozens of tiny exchanges per
-        # trigger) that job-per-stage floor IS the wall clock, while the
-        # runtime re-optimization it buys is worthless at a few thousand
-        # rows.  Off by default for the trigger's plans only (env-tunable
-        # for deployments with corpus-sized triggers).
-        "spark.sql.adaptive.enabled": aqe,
-    }
     old: dict[str, str | None] = {}
-    for k, v in wanted.items():
+    for k, v in _MICRO_BATCH_CONFS.items():
         try:
             old[k] = conf.get(k)
         except Exception:  # noqa: BLE001 — unset key
@@ -167,13 +173,6 @@ def _read_or_empty(store: TableStore, name: str, like: DataFrame) -> DataFrame:
 # ------------------------------------------------------------ squash (T2)
 
 
-#: speculative-tail row cap for the collected (driver-side) squash plan;
-#: beyond it apply_appends falls back to the distributed window form.  The
-#: tail is bounded by design (microblocks since the last key block plus one
-#: batch), so this is a safety valve, not a tuning knob.
-_SQUASH_TAIL_CAP = 20_000
-
-
 def _squash_plan(
     tail_rows: list[tuple[int, str, bool]],
     settled_below: int | None,
@@ -182,8 +181,10 @@ def _squash_plan(
     (rows with uid > ``settled_below``, sorted ascending as (uid, id,
     is_key)).  Returns (last_key, microblock-uid -> anchor-uid,
     anchor-uid -> total id), or None when the tail holds no key block
-    (nothing settles).  Pure python over a bounded list — the exact
-    running-max-anchor semantics of :func:`normalize_squash`'s window."""
+    (nothing settles).  Pure python over a bounded list: each microblock
+    below the latest key block anchors to the nearest key block before it
+    (or to ``settled_below``), and each anchor takes the id of the last
+    block it absorbs."""
     last_key = None
     for uid, _bid, is_key in tail_rows:
         if is_key and (last_key is None or uid > last_key):
@@ -205,37 +206,43 @@ def _squash_plan(
     return last_key, mapping, total
 
 
-def _lit_map(d: dict, key_type: str, val_type: str):
+def _lit_map(d: dict, key_dtype, val_dtype) -> Column:
     """A literal in-plan lookup map (column -> value-or-NULL) — the
     zero-join, zero-broadcast-job form of joining a tiny driver-known
-    dimension."""
-    pairs = []
-    for k, v in d.items():
-        pairs.append(F.lit(k).cast(key_type))
-        pairs.append(F.lit(v).cast(val_type))
-    return F.create_map(*pairs)
+    dimension.  Keys and values each travel as ONE numpy array literal:
+    no per-entry Column is built or analysed, so plan build costs about
+    0.2 ms per entry (per-entry ``create_map`` literals cost ~3 ms)."""
+    keys = np.fromiter(d.keys(), dtype=key_dtype, count=len(d))
+    vals = np.array(list(d.values()), dtype=val_dtype)
+    return F.map_from_arrays(F.lit(keys), F.lit(vals))
 
 
-def _apply_squash_fast(
+def _apply_squash(
     blocks: DataFrame,
     tx_tables: dict[str, DataFrame],
     tail_rows: list[tuple[int, str, bool]],
     settled_below: int | None,
 ) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """T2 squash with the speculative tail already collected (it rides the
-    batch-metadata job): fold decisions are computed driver-side and applied
-    as literal map expressions, so NO per-consumer window recompute, NO
+    """T2 squash (mod.rs:769-792): every microblock below the latest key
+    block folds into its preceding key block — the key block takes the
+    last folded id (total-block id, pg.rs:151-158) and referencing rows
+    re-point their block_uid (pg.rs:216-223).  Microblocks above the
+    latest key block are the live tail and stay.
+
+    The fold decisions are planned on the driver from the speculative tail
+    (``tail_rows``, which rides the batch-metadata job at any size) and
+    applied as literal map expressions, so NO window recompute, NO
     broadcast-exchange jobs, and every staged write stays a single job.
-    Bit-identical to :func:`normalize_squash` (the distributed form, kept
-    for oversized tails and as the parity pin — tests/test_pipeline.py)."""
-    if len(tail_rows) > _SQUASH_TAIL_CAP:
-        return normalize_squash(blocks, tx_tables, settled_below=settled_below)
+    The maps need no size cap: each is one pair of array literals, whose
+    build cost grows by well under a millisecond per entry, and the tail
+    itself is bounded by the microblocks since the last key block plus one
+    batch."""
     plan = _squash_plan(tail_rows, settled_below)
     if plan is None:
         return blocks, tx_tables
     last_key, mapping, total = plan
     is_key = F.col("time_stamp").isNotNull()
-    total_m = _lit_map(total, "long", "string")
+    total_m = _lit_map(total, np.int64, np.str_)
     new_blocks = blocks.filter(is_key | (F.col("uid") > last_key)).select(
         "uid",
         F.coalesce(total_m[F.col("uid")], F.col("id")).alias("id"),
@@ -244,7 +251,7 @@ def _apply_squash_fast(
     )
     if not mapping:
         return new_blocks, tx_tables
-    map_m = _lit_map(mapping, "long", "long")
+    map_m = _lit_map(mapping, np.int64, np.int64)
     new_tables = {
         name: df.withColumn(
             "block_uid",
@@ -255,90 +262,29 @@ def _apply_squash_fast(
     return new_blocks, new_tables
 
 
-#: sentinel: "caller did not precompute last_key — derive it with a job"
-_DERIVE = object()
+# ------------------------------------------------------------ SCD-2 (W1)
 
 
-def normalize_squash(
-    blocks: DataFrame,
-    tx_tables: dict[str, DataFrame],
-    settled_below: int | None = None,
-    last_key: int | None | object = _DERIVE,
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """Wholesale microblock-tail normalization.
-
-    Every microblock below the latest key block folds into its preceding key
-    block: the key block takes the last folded id (total-block id,
-    pg.rs:151-158) and referencing rows re-point their block_uid
-    (pg.rs:216-223).  Microblocks above the latest key block are the live
-    tail and stay.  One pass, pure window algebra — equivalent to the
-    reference performing a squash at every key-block arrival.
-
-    ``settled_below`` (the previous batch's last key-block uid) bounds the
-    anchoring window to rows ABOVE it: everything at or below is already
-    normalized (all key rows, ids final — a settled block never changes
-    again), so the only unpartitioned window sorts the speculative tail +
-    this batch's rows, never O(history).  Tail rows preceding any new key
-    block anchor to ``settled_below`` itself, which can therefore still
-    absorb folded ids.
-
-    ``last_key`` — the max key-block (time_stamp NOT NULL) uid in the
-    tail, or None when the tail has no key block — may be passed in when
-    the caller already knows it (apply_appends folds it into its single
-    batch-metadata job: every stored key block has uid <= settled_below
-    by construction, so the tail's max key uid is the max key uid among
-    the NEW blocks).  Left at the default, it is derived here with one
-    driver job, exactly as before.
-    """
-    if settled_below is None:
-        head = blocks.filter(F.lit(False))
-        tail = blocks
-    else:
-        head = blocks.filter(F.col("uid") <= settled_below)
-        tail = blocks.filter(F.col("uid") > settled_below)
-    w = Window.orderBy("uid").rowsBetween(Window.unboundedPreceding, 0)
-    anchored = tail.withColumn(
-        "anchor",
-        F.coalesce(
-            F.max(F.when(F.col("time_stamp").isNotNull(), F.col("uid"))).over(w),
-            F.lit(settled_below).cast("long"),
-        ),
+def _rechain(
+    store: TableStore, chained_name: str, log: DataFrame, changed: DataFrame
+) -> DataFrame:
+    """The chained SCD table ``chained_name`` re-derived after its update
+    log became ``log`` — the close/insert of an append (W1 + the UNNEST
+    close join J6, pg.rs:225-256) and the reopen repair of a rollback
+    (mod.rs:824-858) alike.  Chains are per-key independent, so only the
+    keys of the ``changed`` log rows (appended or deleted) rechain; every
+    other key's stored chain rows pass through untouched, and the cost
+    follows batch size / reorg depth, not dimension size.  With no stored
+    chain yet the whole log chains."""
+    stored = store.read_or_none(chained_name)
+    if stored is None:
+        return chain_superseded_by(log, key="asset_id", uid="uid")
+    affected = F.broadcast(changed.select("asset_id").distinct())
+    unchanged = stored.join(affected, "asset_id", "left_anti")
+    rechained = chain_superseded_by(
+        log.join(affected, "asset_id", "left_semi"), key="asset_id", uid="uid"
     )
-    if last_key is _DERIVE:
-        last_key = tail.filter(F.col("time_stamp").isNotNull()).agg(
-            F.max("uid")
-        ).collect()[0][0]
-    if last_key is None:
-        return blocks, tx_tables
-
-    settled = anchored.filter(F.col("uid") <= last_key)
-    total_ids = settled.groupBy("anchor").agg(F.max_by("id", "uid").alias("_total_id"))
-    key_rows = settled.filter(F.col("time_stamp").isNotNull()).drop("anchor").unionByName(head)
-    new_blocks = (
-        key_rows.join(
-            F.broadcast(total_ids), key_rows.uid == total_ids.anchor, "left"
-        )
-        .select(
-            "uid",
-            F.coalesce(F.col("_total_id"), F.col("id")).alias("id"),
-            "height",
-            "time_stamp",
-        )
-        .unionByName(blocks.filter(F.col("uid") > last_key))
-    )
-    mapping = (
-        anchored.filter((F.col("uid") <= last_key) & F.col("time_stamp").isNull())
-        .select(F.col("uid").alias("block_uid"), F.col("anchor"))
-    )
-    new_tables = {}
-    for name, df in tx_tables.items():
-        # the using-join moves block_uid to the front; select restores the
-        # table's column order (the staged files must match the stored ones)
-        joined = df.join(F.broadcast(mapping), "block_uid", "left")
-        new_tables[name] = joined.withColumn(
-            "block_uid", F.coalesce(F.col("anchor"), F.col("block_uid"))
-        ).select(*df.columns)
-    return new_blocks, new_tables
+    return unchanged.unionByName(rechained)
 
 
 # ------------------------------------------------------------ candles (A4)
@@ -527,7 +473,7 @@ def apply_appends(
     # per-trigger driver-job floor is the streaming leg's wall clock):
     # speculative-tail floor + squash anchor key + segment SCD flags +
     # present tx types + candle watermark — previously three separate
-    # collects here plus a fourth inside normalize_squash.  The squash
+    # collects here plus a fourth for the squash anchor.  The squash
     # key rides here because every STORED key block has uid <= prev_key
     # by construction, so the tail's max key uid is the max key uid
     # among the NEW blocks.  The tx-type/watermark aggregates run over
@@ -672,7 +618,7 @@ def apply_appends(
     # blocks (tiny dimension: full rewrite) + squash normalization over the
     # block_uid-bearing tail frames
     blocks = _read_or_empty(store, "blocks_microblocks", new_blocks).unionByName(new_blocks)
-    blocks, merged_tx = _apply_squash_fast(
+    blocks, merged_tx = _apply_squash(
         blocks, merged_tx, tail_rows, settled_below=prev_key
     )
 
@@ -690,33 +636,13 @@ def apply_appends(
         new_ids = id_frames[0]
         for f in id_frames[1:]:
             new_ids = new_ids.unionByName(f)
-    # SCD logs: asset updates + tickers.  Chains are per-key independent, so
-    # only keys with updates in THIS batch rechain (W1 + the UNNEST close
-    # join J6, pg.rs:225-256); untouched keys' chain rows pass through — at
-    # scale the rechain cost follows batch size, not dimension size.
-    # batch-content flags (which slowly-changing inputs does this segment
-    # actually carry?) ride the consolidated metadata job above
+    # SCD logs: asset updates + tickers; only keys with updates in THIS
+    # batch rechain (_rechain).  A log with no updates this batch is
+    # already current, and so is its chained table — restaging would
+    # rewrite full history per batch for nothing.  The batch-content flags
+    # (which slowly-changing inputs does this segment actually carry?)
+    # ride the consolidated metadata job above.
     flags = meta_row
-
-    def _scd(log_name: str, chained_name: str, new_rows: DataFrame, has_new: bool) -> None:
-        if store.exists(log_name) and not has_new:
-            # no updates this batch: both the log and the chained table are
-            # already current — restaging would rewrite full history per
-            # batch for nothing
-            return
-        log = _read_or_empty(store, log_name, new_rows).unionByName(new_rows)
-        store.stage(log_name, log)
-        stored_chain = store.read_or_none(chained_name)
-        if stored_chain is None:
-            store.stage(chained_name, chain_superseded_by(log, key="asset_id", uid="uid"))
-            return
-        affected = new_rows.select("asset_id").distinct()
-        unchanged = stored_chain.join(F.broadcast(affected), "asset_id", "left_anti")
-        rechained = chain_superseded_by(
-            log.join(F.broadcast(affected), "asset_id", "left_semi"),
-            key="asset_id", uid="uid",
-        )
-        store.stage(chained_name, unchanged.unionByName(rechained))
 
     new_au = extract_asset_updates(seg_updates)
     new_tick = extract_ticker_updates(seg_updates, asset_storage_address)
@@ -725,7 +651,7 @@ def apply_appends(
 
     # ---- asset SCD frames, built DRIVER-SIDE before the write wave (the
     # candle task consumes the chained frame, so it cannot live inside a
-    # sibling task like the ticker/waves legs do).  Mirrors _scd exactly.
+    # sibling task like the ticker/waves legs do)
     au_skip = store.exists("asset_updates_log") and not bool(flags["has_au"])
     au_tasks: list = []
     if au_skip:
@@ -735,21 +661,7 @@ def apply_appends(
         au_log_final = _read_or_empty(
             store, "asset_updates_log", new_au
         ).unionByName(new_au)
-        stored_chain = store.read_or_none("asset_updates")
-        if stored_chain is None:
-            au_chained = chain_superseded_by(
-                au_log_final, key="asset_id", uid="uid"
-            )
-        else:
-            affected = new_au.select("asset_id").distinct()
-            unchanged = stored_chain.join(
-                F.broadcast(affected), "asset_id", "left_anti"
-            )
-            rechained = chain_superseded_by(
-                au_log_final.join(F.broadcast(affected), "asset_id", "left_semi"),
-                key="asset_id", uid="uid",
-            )
-            au_chained = unchanged.unionByName(rechained)
+        au_chained = _rechain(store, "asset_updates", au_log_final, new_au)
         au_tasks = [
             lambda: store.stage("asset_updates_log", au_log_final),
             lambda: store.stage("asset_updates", au_chained),
@@ -784,10 +696,13 @@ def apply_appends(
             store.stage("asset_origins", extract_asset_origins(au_log_final, txs3))
 
     def _tickers() -> None:
-        _scd(
-            "asset_tickers_log", "asset_tickers", new_tick,
-            bool(flags["has_de"]),
+        if store.exists("asset_tickers_log") and not bool(flags["has_de"]):
+            return
+        log = _read_or_empty(store, "asset_tickers_log", new_tick).unionByName(
+            new_tick
         )
+        store.stage("asset_tickers_log", log)
+        store.stage("asset_tickers", _rechain(store, "asset_tickers", log, new_tick))
 
     def _waves() -> None:
         # waves_data: dedupe on quantity (S6); skip the full-history
@@ -909,27 +824,11 @@ def rollback_to_uid(store: TableStore, boundary: int) -> _dt.datetime | None:
             continue
         survivors = log.filter(F.col("block_uid") <= boundary)
         store.stage(log_name, survivors)
-        # affected-keys-only rechain, mirroring the appends path (_scd):
-        # chains are per-key independent, and a key none of whose rows are
-        # deleted keeps an identical per-key log — its stored chain rows
-        # pass through untouched.  Only keys with rows ABOVE the boundary
-        # (the reference's DELETE .. RETURNING feed, pg.rs:225-256) rechain,
-        # so rollback cost follows reorg depth, not dimension size.
-        stored_chain = store.read_or_none(chained)
-        if stored_chain is None:
-            store.stage(
-                chained, chain_superseded_by(survivors, key="asset_id", uid="uid")
-            )
-            continue
-        affected = (
-            log.filter(F.col("block_uid") > boundary).select("asset_id").distinct()
-        )
-        unchanged = stored_chain.join(F.broadcast(affected), "asset_id", "left_anti")
-        rechained = chain_superseded_by(
-            survivors.join(F.broadcast(affected), "asset_id", "left_semi"),
-            key="asset_id", uid="uid",
-        )
-        store.stage(chained, unchanged.unionByName(rechained))
+        # only keys with rows ABOVE the boundary (the reference's DELETE ..
+        # RETURNING feed, pg.rs:225-256) rechain; a key none of whose rows
+        # are deleted keeps an identical per-key log and chain
+        deleted = log.filter(F.col("block_uid") > boundary)
+        store.stage(chained, _rechain(store, chained, survivors, deleted))
 
     wd = store.read_or_none("waves_data")
     if wd is not None:
@@ -1025,61 +924,59 @@ def process_batch(
     # recompute).  The tx-derived writes read apply_appends' checkpoint
     # instead.  The batch is micro by construction, so the cache is
     # bounded; released in the finally below.
-    ctx = _micro_batch_confs(store.spark)
-    ctx.__enter__()
-    batch_df = batch_df.persist()
-    try:
-        # driver-side sort: an orderBy on the micro-batch plans a range
-        # partitioner (its own sampling job); the segment list is tiny by
-        # construction, so sort the collected rows in Python instead
-        meta = sorted(
-            batch_df.select("seq", "kind", "ref_id").collect(),
-            key=lambda m: m["seq"],
-        )
-        if not meta:
-            return
-        segments: list[tuple[str, int, int] | tuple[str, str]] = []
-        run_start = None
-        for m in meta:
-            if m["kind"] in ("block", "microblock"):
-                if run_start is None:
-                    run_start = m["seq"]
-                run_end = m["seq"]
-            else:  # rollback closes any open run
-                if run_start is not None:
-                    segments.append(("appends", run_start, run_end))
-                    run_start = None
-                segments.append(("rollback", m["ref_id"]))
-        if run_start is not None:
-            segments.append(("appends", run_start, run_end))
-
+    with _micro_batch_confs(store.spark):
+        batch_df = batch_df.persist()
         try:
-            for seg in segments:
-                if seg[0] == "appends":
-                    _, lo, hi = seg
-                    # candles recompute inside apply_appends' write wave
-                    apply_appends(
-                        store,
-                        batch_df.filter(
-                            (F.col("seq") >= lo) & (F.col("seq") <= hi)
-                        ),
-                        asset_storage_address,
-                        chain_id=chain_id,
-                    )
-                else:
-                    watermark = apply_rollback(store, seg[1])
-                    if watermark is not None:
-                        recompute_candles(store, watermark)
-            store.commit()
-        except BaseException:
-            # leave no staged state behind: the store instance is reused
-            # across triggers (frame memo), so a failed batch must not
-            # bleed its staged versions into the retry
-            store.rollback_staged()
-            raise
-    finally:
-        batch_df.unpersist()
-        ctx.__exit__(None, None, None)
+            # driver-side sort: an orderBy on the micro-batch plans a range
+            # partitioner (its own sampling job); the segment list is tiny by
+            # construction, so sort the collected rows in Python instead
+            meta = sorted(
+                batch_df.select("seq", "kind", "ref_id").collect(),
+                key=lambda m: m["seq"],
+            )
+            if not meta:
+                return
+            segments: list[tuple[str, int, int] | tuple[str, str]] = []
+            run_start = None
+            for m in meta:
+                if m["kind"] in ("block", "microblock"):
+                    if run_start is None:
+                        run_start = m["seq"]
+                    run_end = m["seq"]
+                else:  # rollback closes any open run
+                    if run_start is not None:
+                        segments.append(("appends", run_start, run_end))
+                        run_start = None
+                    segments.append(("rollback", m["ref_id"]))
+            if run_start is not None:
+                segments.append(("appends", run_start, run_end))
+
+            try:
+                for seg in segments:
+                    if seg[0] == "appends":
+                        _, lo, hi = seg
+                        # candles recompute inside apply_appends' write wave
+                        apply_appends(
+                            store,
+                            batch_df.filter(
+                                (F.col("seq") >= lo) & (F.col("seq") <= hi)
+                            ),
+                            asset_storage_address,
+                            chain_id=chain_id,
+                        )
+                    else:
+                        watermark = apply_rollback(store, seg[1])
+                        if watermark is not None:
+                            recompute_candles(store, watermark)
+                store.commit()
+            except BaseException:
+                # leave no staged state behind: the store instance is reused
+                # across triggers (frame memo), so a failed batch must not
+                # bleed its staged versions into the retry
+                store.rollback_staged()
+                raise
+        finally:
+            batch_df.unpersist()
 
 
 def run_stream(

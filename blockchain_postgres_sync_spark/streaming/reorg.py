@@ -76,19 +76,6 @@ def squash_microblocks(
     return new_blocks, new_tables
 
 
-def rollback_block_uid(blocks: DataFrame, block_id: str) -> int | None:
-    """Resolve a rollback target id to its block uid (mod.rs:794-822)."""
-    row = blocks.filter(F.col("id") == block_id).select("uid").collect()
-    return row[0]["uid"] if row else None
-
-
-def rollback_tables(
-    tables: dict[str, DataFrame], boundary_uid: int, uid_col: str = "block_uid"
-) -> dict[str, DataFrame]:
-    """T3 delete phase (S7): keep rows at or below the boundary uid."""
-    return {n: df.filter(F.col(uid_col) <= boundary_uid) for n, df in tables.items()}
-
-
 def rollback_scd(updates: DataFrame, boundary_uid: int, key: str = "asset_id") -> DataFrame:
     """T3 repair phase (mod.rs:824-858): recompute the chain from surviving
     rows — the reference's 'reopen lowest deleted uid per key' UPDATE is

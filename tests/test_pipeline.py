@@ -75,31 +75,61 @@ def test_incremental_equals_oneshot(stores):
         assert a[name] == b[name], f"table {name} diverges between incremental and one-shot"
 
 
-def test_normalize_squash_fallback_matches_fast_path(
-    spark, stores, tmp_path, monkeypatch
-):
-    """With the driver-side tail cap forced to 0, every squash takes the
-    distributed normalize_squash form — including the settled_below
-    branch (the second batch squashes micro-3/micro-4 into stored
-    block-2) — and must land the same store as the default path."""
-    from blockchain_postgres_sync_spark.streaming import pipeline
-
-    inc, _ = stores
-    calls = []
-    fallback = pipeline.normalize_squash
-
-    def counted(*args, **kwargs):
-        calls.append(kwargs.get("settled_below"))
-        return fallback(*args, **kwargs)
-
-    monkeypatch.setattr(pipeline, "_SQUASH_TAIL_CAP", 0)
-    monkeypatch.setattr(pipeline, "normalize_squash", counted)
-    slow = _run_log(spark, tmp_path / "slow", wf.scenario_log(), [2, 3, 2])
-    assert any(c is not None for c in calls)
-    a = _table_sets(slow, ALL_TABLES)
-    b = _table_sets(inc, ALL_TABLES)
+def test_incremental_equals_oneshot_anchoring_split(spark, stores, tmp_path):
+    """Split [2, 3, 2]: the second batch's microblocks (micro-3, micro-4)
+    anchor to block-2, which the first batch already stored, and settle
+    within that batch when block-5 arrives (the squash's
+    ``settled_below`` branch); the third batch rolls back and re-appends.
+    Every table must still equal the one-shot store."""
+    _, one = stores
+    inc = _run_log(spark, tmp_path / "inc", wf.scenario_log(), [2, 3, 2])
+    a = _table_sets(inc, ALL_TABLES)
+    b = _table_sets(one, ALL_TABLES)
     for name in ALL_TABLES:
-        assert a[name] == b[name], f"table {name} diverges on the fallback path"
+        assert a[name] == b[name], f"table {name} diverges on split [2, 3, 2]"
+
+
+def test_apply_squash_driver_sized_tail(spark):
+    """The squash maps at a size no scenario reaches: a tail of ~3,000
+    blocks above a settled key block, every 10th a key block.  The
+    literal maps must apply exactly the dicts of ``_squash_plan``."""
+    import datetime as dt
+
+    from blockchain_postgres_sync_spark.streaming.pipeline import (
+        _apply_squash, _squash_plan,
+    )
+
+    settled = 5
+    ts = dt.datetime(2024, 1, 1)
+    blocks = [(u, f"block-{u}", u, ts) for u in range(1, settled + 1)]
+    tail = []
+    for u in range(settled + 1, settled + 3005):
+        key = (u - settled) % 10 == 0
+        blocks.append((u, f"{'block' if key else 'micro'}-{u}", u, ts if key else None))
+        tail.append((u, f"{'block' if key else 'micro'}-{u}", key))
+    txs = [(f"tx-{u}", u * 10, u) for u, *_ in blocks]
+
+    last_key, mapping, total = _squash_plan(tail, settled)
+    assert len(mapping) > 2500 and settled in total and settled + 1 in mapping
+
+    blocks_df = spark.createDataFrame(
+        blocks, "uid long, id string, height int, time_stamp timestamp"
+    )
+    txs_df = spark.createDataFrame(txs, "id string, uid long, block_uid long")
+    new_blocks, new_tables = _apply_squash(
+        blocks_df, {"txs": txs_df}, tail, settled
+    )
+
+    want_blocks = sorted(
+        (u, total.get(u, bid), h, t)
+        for u, bid, h, t in blocks
+        if t is not None or u > last_key
+    )
+    got_blocks = sorted(tuple(r) for r in new_blocks.collect())
+    assert got_blocks == want_blocks
+    want_txs = sorted((i, u, mapping.get(b, b)) for i, u, b in txs)
+    assert sorted(tuple(r) for r in new_tables["txs"].collect()) == want_txs
+    assert new_tables["txs"].columns == txs_df.columns
 
 
 def test_unchanged_children_keep_their_version(spark, tmp_path):
