@@ -697,43 +697,19 @@ def rollup_interval(src_candles: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-#: levels persisted by the previous persist_levels=True cascade call —
-#: released on the next call so repeated invocations don't accumulate cache.
-_CASCADE_CACHE: list[DataFrame] = []
-
-
-def full_cascade(minute: DataFrame, persist_levels: bool = True) -> DataFrame:
+def full_cascade(minute: DataFrame) -> DataFrame:
     """Run the full 12-step cascade; returns the union over all 13 intervals.
 
     Each level feeds from the previous level's DataFrame (per
-    CANDLE_INTERVALS).  With ``persist_levels=False`` the unioned plan
-    textually repeats each branch's lineage, but AQE's exchange reuse
-    dedups the shared prefixes at runtime: one job, 13 shuffles each
-    executed once — measured the fastest form at sf0.1/local[32] (~3s on a
-    quiet box, min-of-N; sensitive to the AQE advisory partition size, see
-    session.py) and the shape that scales (per-level hash partitioning
-    on the full grouping key, AQE skew handling, no cache memory).
-    ``persist_levels=True`` (default) persists + materializes each level —
-    13 sequential cache-fill jobs; use it when levels are consumed AGAIN
-    after this call (the streaming pipeline effectively does, by writing
-    every level to the candle store, mirroring the reference's per-interval
-    upsert chain, pg.rs:740-815) — the cost of the extra jobs then buys
-    single execution of each level.
+    CANDLE_INTERVALS).  The unioned plan textually repeats each branch's
+    lineage, but AQE's exchange reuse dedups the shared prefixes at
+    runtime: one job, 13 shuffles each executed once.  The tests' reference
+    for the streaming pipeline's incremental recompute
+    (``cascade_tail_exact_onepass``).
     """
-    if persist_levels:
-        for df in _CASCADE_CACHE:
-            df.unpersist()
-        _CASCADE_CACHE.clear()
     by_interval: dict[str, DataFrame] = {"1m": minute}
-    if persist_levels:
-        by_interval["1m"] = minute.persist()
-        _CASCADE_CACHE.append(by_interval["1m"])
     for src, dst in CANDLE_CASCADE:
-        lvl = rollup_interval(by_interval[src], src, dst)
-        if persist_levels:
-            lvl = lvl.persist()
-            _CASCADE_CACHE.append(lvl)
-        by_interval[dst] = lvl
+        by_interval[dst] = rollup_interval(by_interval[src], src, dst)
     out = by_interval[ALL_INTERVALS[0]]
     for ivl in ALL_INTERVALS[1:]:
         out = out.unionByName(by_interval[ivl])

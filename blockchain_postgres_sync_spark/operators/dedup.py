@@ -313,10 +313,9 @@ def banded_match_scores(
     id_col: str = "doc_id",
     num_hashes: int = 12,
 ) -> DataFrame:
-    """Pair-level scores behind :func:`incremental_lsh_matches` (and its
-    streaming twin ``streaming.lsh_stream.streaming_index_matches``): join
-    two :func:`banded_signature_rows` frames on the bucket key and score
-    every met pair — ``(id_col, index_id, agree_x100)``, one row per
+    """Pair-level scores behind :func:`incremental_lsh_matches`: join two
+    :func:`banded_signature_rows` frames on the bucket key and score every
+    met pair — ``(id_col, index_id, agree_x100)``, one row per
     SHARED BAND (a pair meeting in several bands repeats with an identical
     deterministic score, so any downstream dedupe/agg is idempotent)."""
     joined = inc_banded.select(
@@ -1494,7 +1493,7 @@ def minhash_jaccard_probe(
     hoisted and shared, not new work: signatures ship ~100 bytes/doc,
     and the shingle arrays would cross per join side anyway once the
     pair list outgrows a broadcast.  Interleaved A/B
-    (tools/ab_minhash_probe.py): local sf1 better in 4/5 passes (mins
+    (OPTIMIZATION_r10.md): local sf1 better in 4/5 passes (mins
     4.28 vs 6.13 s), sf0.1 neutral (1.77 vs 1.80 s); value parity
     asserted in-script at both scales (3,095 / 236,027 pair rows
     identical).

@@ -81,7 +81,7 @@ def _cents(col, mul: int = 100):  # Column -> Column
     result equals ``cast(x as decimal(18,2)) * mul`` exactly.  The decimal
     route costs a per-row double->BigDecimal conversion plus a BigDecimal
     multiply; this is a double FMA + cast (guide §2.3 narrower types).
-    Round-11 A/B (tools/ab_r11_queries.py, interleaved, parity-gated):
+    Round-11 A/B (OPTIMIZATION_r11.md; interleaved, parity-gated):
     pricing_summary sf1 1.42->0.88 s, assets_view 2.42->1.58 s,
     top_orders 1.39->1.24 s, winning every adjacent pass at both scales."""
     return ((col * mul) + F.lit(0.5)).cast("long")
@@ -750,7 +750,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round-11 measured decision (r10 verdict item 3 CHALLENGED and
     rejected on fresh numbers): the AllPairs/PPJoin prefix plan was
     swapped in under this name, proven output-identical (oracle hash at
-    sf0.1, pair-set diff at both SFs via tools/ab_ngram_jaccard.py), and
+    sf0.1, pair-set diff at both SFs; OPTIMIZATION_r11.md), and
     A/B'd — the prefix form LOSES at both scales on this corpus (sf1
     interleaved min 44.2 s vs 9.8 s; sf0.1 1.33 vs 1.09).  The verdict's
     71.5 s premise was the stale pre-fan-out/AQE-floor SCALE_CHECK_r10

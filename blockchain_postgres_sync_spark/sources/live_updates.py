@@ -72,7 +72,7 @@ def kafka_updates(
     decoder.  This is the production S1 shape (replayable, partition-offset
     checkpointing); requires the spark-sql-kafka connector jar on the
     cluster — not shipped in this sandbox, hence the decode seam is the
-    tested surface (tests/test_streaming_dedup.py::test_kafka_frame_decode
+    tested surface (tests/test_live_updates.py::test_kafka_frame_decode
     _matches_socket_path)."""
     raw = (
         spark.readStream.format("kafka")

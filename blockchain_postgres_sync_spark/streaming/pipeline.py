@@ -857,14 +857,17 @@ def startup_rollback(
 
     Ladder heights mirror the reference exactly: step = min(step, depth),
     rungs at current-step, current-2*step, ... (staying above current-depth)
-    and finally current-depth itself; stored blocks AT those heights become
-    (uid, height) targets processed in descending uid order, each rung a
-    bounded incremental delete instead of one huge one.  All rungs + the
-    single candle repair commit atomically as one store transaction
-    (the reference wraps the whole ladder in one Postgres transaction).
+    and finally current-depth itself; stored blocks AT those heights are the
+    rungs.  Every rung deletes ``block_uid > rung uid``, so the lowest rung
+    subsumes the higher ones: the ladder runs as ONE rollback to the lowest
+    rung's uid, and its candle watermark is the minimum the rungs would have
+    produced one by one.  The rollback + candle repair commit atomically as
+    one store transaction (the reference wraps the whole ladder in one
+    Postgres transaction).
 
-    Returns the height ingestion should resume from (last rung height + 1),
-    or None when the store is empty (resume from the configured start).
+    Returns the height ingestion should resume from (lowest rung height + 1),
+    or None when the store is empty or no block is stored at a rung height
+    (resume from the configured start).
     """
     blocks = store.read_or_none("blocks_microblocks")
     if blocks is None:
@@ -885,23 +888,20 @@ def _startup_rollback_inner(
     final = max(current - depth, 0)
     heights = list(range(starting, final, -step))
     heights.append(final)
-    ladder = (
+    lowest = (
         blocks.filter(F.col("height").isin(heights))
         .select("uid", "height")
-        .orderBy(F.desc("uid"))
+        .orderBy("uid")
+        .limit(1)
         .collect()
     )
-    if not ladder:
+    if not lowest:
         return None
-    watermark: _dt.datetime | None = None
-    for rung in ladder:
-        wm = rollback_to_uid(store, rung["uid"])
-        if wm is not None:
-            watermark = wm if watermark is None else min(watermark, wm)
+    watermark = rollback_to_uid(store, lowest[0]["uid"])
     if watermark is not None:
         recompute_candles(store, watermark)
     store.commit()
-    return int(ladder[-1]["height"]) + 1
+    return int(lowest[0]["height"]) + 1
 
 
 # ------------------------------------------------------------ batch driver

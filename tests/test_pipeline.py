@@ -383,6 +383,50 @@ def test_startup_rollback_ladder_restart(spark, tmp_path):
     assert _table_sets(store, ALL_TABLES) == _table_sets(clean, ALL_TABLES)
 
 
+def test_startup_rollback_ladder_runs_as_one_rollback(
+    spark, stores, tmp_path, monkeypatch
+):
+    """A ladder of several rungs (step < depth) runs as ONE rollback to its
+    lowest rung: current 104, depth 4, step 1 -> heights 103, 102, 101, 100;
+    blocks are stored at 101 (uid 2) and 100 (uid 1), so the store rolls
+    back to uid 1 and resumes at 101.  Replaying the canonical chain from
+    there must reproduce the uninterrupted run on every table."""
+    import shutil
+
+    from blockchain_postgres_sync_spark.streaming import pipeline
+
+    _, clean = stores
+    crash_root = tmp_path / "crash"
+    shutil.copytree(clean.root, crash_root)
+    store = TableStore(spark, str(crash_root))
+    rungs = (
+        store.read("blocks_microblocks")
+        .filter(F.col("height").isin(103, 102, 101, 100))
+        .count()
+    )
+    assert rungs >= 2
+
+    boundaries = []
+    rollback_to_uid = pipeline.rollback_to_uid
+
+    def recording(store, boundary):
+        boundaries.append(boundary)
+        return rollback_to_uid(store, boundary)
+
+    monkeypatch.setattr(pipeline, "rollback_to_uid", recording)
+    resume = pipeline.startup_rollback(store, depth=4, step=1)
+    assert boundaries == [1]
+    assert resume == 101
+    assert [r["uid"] for r in store.read("blocks_microblocks").collect()] == [1]
+
+    # canonical chain from height 101: block-2, its microblocks, and block-7
+    # (block-5 was reorged away by rollback-6)
+    replay = [r for r in wf.scenario_log() if r["seq"] in (2, 3, 4, 7)]
+    assert all(r["height"] >= resume for r in replay)
+    process_batch(store, _mk_updates(spark, replay), wf.ASSET_STORAGE)
+    assert _table_sets(store, ALL_TABLES) == _table_sets(clean, ALL_TABLES)
+
+
 def test_startup_rollback_empty_and_missing_heights(spark, tmp_path):
     """Ladder edge cases: empty store -> None (resume from configured
     start); no stored block at any ladder height (reference .optional()

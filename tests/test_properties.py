@@ -83,7 +83,7 @@ def test_candle_invariants(spark, trades):
         ["uid", "time_stamp", "amount_asset_id", "price_asset_id",
          "sender", "height", "amount", "price"],
     ).withColumn("time_stamp", F.col("time_stamp").cast("timestamp"))
-    allc = full_cascade(minute_candles(df), persist_levels=False).collect()
+    allc = full_cascade(minute_candles(df)).collect()
     per_interval: dict[str, dict] = {}
     for r in allc:
         assert float(r.low) <= float(r.open) <= float(r.high), r
@@ -134,7 +134,7 @@ def test_cascade_fixedpoint_parity(spark, trades):
     ).withColumn("time_stamp", F.col("time_stamp").cast("timestamp")).withColumn(
         "price", F.col("price").cast("decimal(18,2)")
     )
-    a = full_cascade(minute_candles(df), persist_levels=False)
+    a = full_cascade(minute_candles(df))
     b = full_cascade_fixedpoint(df, f=2)
     assert a.schema == b.schema
     assert a.exceptAll(b).count() == 0
